@@ -30,8 +30,8 @@ object Bench {
     // forced-distributed mode (VERDICT r09 item 3): the sf0.1 graphs
     // all sit below the 1 M-edge local-arm thresholds, so the
     // DISTRIBUTED fixpoint arms — the actual 100 TB path — are
-    // invisible to the regular bench. SPARK_GRAFT_FORCE_DIST=1 zeroes
-    // every localEdgeThreshold conf so x01/x18/x24-x34 run their
+    // invisible to the regular bench. SPARK_GRAFT_FORCE_DIST=1 sets
+    // the one arm switch (graphx.Arms) so x01/x18/x24-x34 run their
     // distributed loops; the run writes bench_dist.json (committed per
     // round) instead of bench_out.json so distributed-arm drift is
     // tracked round-over-round. Results are identical either way (the
@@ -39,10 +39,7 @@ object Bench {
     val forceDist = sys.env.get("SPARK_GRAFT_FORCE_DIST")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     if (forceDist)
-      Seq("cc", "cycle", "bfs", "scc", "mis", "coloring", "hits",
-          "matching", "louvain", "ppr", "sssp", "bc", "pr")
-        .foreach(a =>
-          spark.conf.set(s"spark.graft.$a.localEdgeThreshold", "0"))
+      spark.conf.set(graft.graphx.Arms.ForceDistributedConf, "true")
     // clear checkpoints a previous JVM left behind (memory-sink queries
     // cannot recover a checkpoint — a stale dir fails the query)
     def rmStreamCk(f: java.io.File): Unit = {
@@ -128,12 +125,12 @@ object Bench {
         shortIds.map(_._1).distinct).mkString(","))
     // redundant full-name copy on disk in case stdout capture truncates;
     // carries the raw per-query samples (stdout only gets the min).
-    // A filtered (SPARK_GRAFT_ONLY) run is a profiling run — write the
-    // sidecar file instead so it can never clobber the committed
-    // full-registry artifact (bit us twice in round 4)
+    // A filtered (SPARK_GRAFT_ONLY) run is a profiling run — forced
+    // or not, it writes the sidecar file so it can never clobber a
+    // committed full-registry artifact (bit us twice in round 4)
     try {
-      val outName = if (forceDist) "bench_dist.json"
-        else if (only.isDefined) "bench_only.json" else "bench_out.json"
+      val outName = if (only.isDefined) "bench_only.json"
+        else if (forceDist) "bench_dist.json" else "bench_out.json"
       val w = new java.io.PrintWriter(outName)
       val samples = runLog.map { case (k, vs) =>
         "\"" + k + "\":" + vs.mkString("[", ",", "]")
@@ -180,7 +177,10 @@ object Bench {
     val head =
       s"""{"metric":"total","value":${f3(entries.map(_._2).sum)},"unit":"sec","queries":{"""
     val tail = s"""},"sf":"$sfDir"}"""
-    val restReserve = ",\"_rest\":99999.999".length
+    // |_rest| never exceeds the sum of |v|, so neither does its width
+    val restReserve = (",\"_rest\":" +
+      (if (entries.exists(_._2 < 0)) "-" else "") +
+      f3(entries.map(e => math.abs(e._2)).sum)).length
     val sorted = entries.sortBy { case (n, v) => (-v, n) }
     val sb = new StringBuilder(head)
     var used = head.length + tail.length + restReserve

@@ -1,7 +1,5 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -12,26 +10,36 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * GetMetrics/GetStats surface (reference: src/core/FileStore.fs:415-485,
   * definitions src/core/Metrics.fs). A QueryExecutionListener records
   * (action, wall ns, rows-ish) per completed query; `snapshot()` drains
-  * the same way GetMetrics serialized its registry.
+  * the same way GetMetrics serialized its registry. Only the most
+  * recent [[Metrics.MaxEntries]] entries are kept, so a long-running
+  * server's driver memory stays bounded.
   */
 final class Metrics private (spark: SparkSession) {
   case class Entry(action: String, durationNs: Long, error: Option[String])
 
-  private val entries = new ConcurrentLinkedQueue[Entry]()
+  private val entries = new java.util.ArrayDeque[Entry]()
+
+  private[api] def record(e: Entry): Unit = entries.synchronized {
+    if (entries.size == Metrics.MaxEntries) entries.removeFirst()
+    entries.addLast(e)
+  }
 
   private val listener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      entries.add(Entry(funcName, durationNs, None))
+      record(Entry(funcName, durationNs, None))
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      entries.add(Entry(funcName, 0L, Some(exception.getMessage)))
+      record(Entry(funcName, 0L, Some(exception.getMessage)))
   }
   spark.listenerManager.register(listener)
 
-  def snapshot(): Seq[Entry] = entries.asScala.toSeq
-  def clear(): Unit = entries.clear()
+  def snapshot(): Seq[Entry] = entries.synchronized(entries.asScala.toVector)
+  def clear(): Unit = entries.synchronized(entries.clear())
   def close(): Unit = spark.listenerManager.unregister(listener)
 }
 
 object Metrics {
+  /** Entries kept for `snapshot()`; older ones are dropped first. */
+  val MaxEntries = 10000
+
   def attach(spark: SparkSession): Metrics = new Metrics(spark)
 }

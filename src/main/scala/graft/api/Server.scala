@@ -3,7 +3,9 @@ package graft.api
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.{GraphMlReader, NTriplesReader}
@@ -65,15 +67,7 @@ object Server {
         .filter(_.contains("shape=nodes"))
         .map(_ => engine.getNodes(q).toDF())
         .getOrElse(engine.query(q))
-      val schema = df.schema
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0) // chunked — length unknown up front
-      val out = ex.getResponseBody
-      try {
-        val it = df.toLocalIterator()
-        while (it.hasNext)
-          out.write((jsonRow(schema, it.next()) + "\n").getBytes(UTF_8))
-      } finally out.close()
+      streamNdjson(ex, df)
     })
 
     http.createContext("/sql", (ex: HttpExchange) => guard(ex) {
@@ -84,16 +78,7 @@ object Server {
       // COSINE_TOPK plan into the custom execs from this endpoint).
       // Same streaming discipline as /get: toLocalIterator into a
       // chunked NDJSON response, nothing collected.
-      val df = engine.spark.sql(body(ex))
-      val schema = df.schema
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      try {
-        val it = df.toLocalIterator()
-        while (it.hasNext)
-          out.write((jsonRow(schema, it.next()) + "\n").getBytes(UTF_8))
-      } finally out.close()
+      streamNdjson(ex, engine.spark.sql(body(ex)))
     })
 
     http.createContext("/load", (ex: HttpExchange) => guard(ex) {
@@ -179,13 +164,8 @@ object Server {
         try out.write(bytes) finally out.close()
       } else {
         val lines = graft.ingest.NTriplesWriter.lines(engine.query(q))
-        ex.getResponseHeaders.add("Content-Type", "application/n-triples")
-        ex.sendResponseHeaders(200, 0)
-        val out = ex.getResponseBody
-        try {
-          val it = lines.toLocalIterator()
-          while (it.hasNext) out.write((it.next() + "\n").getBytes(UTF_8))
-        } finally out.close()
+        streamLines(ex, "application/n-triples")(
+          lines.toLocalIterator().asScala)
       }
     })
 
@@ -207,8 +187,8 @@ object Server {
         ("policy/storage", "layout", "bucketed_sorted_murmur3"),
         ("policy/traversal", "point_path_max_frontier",
           graft.graph.Traversal.PointPathMaxFrontier.toString),
-        ("policy/analytics", "cc_local_edge_threshold",
-          conf.get("spark.graft.cc.localEdgeThreshold", "1000000")),
+        ("policy/analytics", "force_distributed",
+          graft.graphx.Arms.forced(engine.spark).toString),
         ("policy/ingest", "lineage_cut_every_loads", "8"),
         ("policy/ingest", "max_files_per_trigger", "10"),
         ("policy/session", "shuffle_partitions",
@@ -217,13 +197,10 @@ object Server {
           conf.get("spark.sql.streaming.stateStore.providerClass",
             "HDFSBackedStateStoreProvider").split("\\.").last))
         .filter { case (id, _, _) => iris.forall(_(id)) }
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      try rows.foreach { case (id, key, value) =>
-        out.write((s"""{"id":${q(id)},"key":${q(key)},"value":${q(value)}}""" +
-          "\n").getBytes(UTF_8))
-      } finally out.close()
+      streamLines(ex, "application/x-ndjson")(rows.iterator.map {
+        case (id, key, value) =>
+          s"""{"id":${q(id)},"key":${q(key)},"value":${q(value)}}"""
+      })
     })
 
     http.createContext("/stats", (ex: HttpExchange) => guard(ex) {
@@ -252,6 +229,26 @@ object Server {
         try respond(ex, 400, s"""{"ok":false,"error":${q(String.valueOf(e.getMessage))}}""")
         catch { case _: Throwable => () } // headers already sent mid-stream
     } finally ex.close()
+
+  /** Rows of `df` as NDJSON, one [[jsonRow]] per line. */
+  private def streamNdjson(ex: HttpExchange, df: DataFrame): Unit = {
+    val schema = df.schema
+    streamLines(ex, "application/x-ndjson")(
+      df.toLocalIterator().asScala.map(jsonRow(schema, _)))
+  }
+
+  /** A chunked 200 response, one line per element — the iterator is
+    * opened after the headers go out and drained straight into the
+    * body, partition-at-a-time for `toLocalIterator`, nothing
+    * collected. */
+  private def streamLines(ex: HttpExchange, contentType: String)(
+      lines: => Iterator[String]): Unit = {
+    ex.getResponseHeaders.add("Content-Type", contentType)
+    ex.sendResponseHeaders(200, 0) // chunked — length unknown up front
+    val out = ex.getResponseBody
+    try lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
+    finally out.close()
+  }
 
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), UTF_8)

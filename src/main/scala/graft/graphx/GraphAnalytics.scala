@@ -79,19 +79,14 @@ object GraphAnalytics {
     // adaptive dispatch, the CC-loop pattern: a 20-round synchronous
     // fixpoint is 40+ sequential shuffle stages whose scheduling
     // overhead dwarfs the arithmetic while the graph fits the driver —
-    // at or under `spark.graft.pr.localEdgeThreshold` ec rows (edges +
-    // one self-edge per vertex; default 1M ≈ tens of MB of longs) the
-    // identical integer recurrence runs as a driver array loop
-    // (milliseconds); above it the distributed join+agg loop runs,
-    // checkpointed every 5 rounds. Both arms are
+    // at or under 1M ec rows (edges + one self-edge per vertex ≈ tens
+    // of MB of longs) the identical integer recurrence runs as a
+    // driver array loop (milliseconds); above it the distributed
+    // join+agg loop runs, checkpointed every 5 rounds. Both arms are
     // the same exact integer math — equality pinned in GraphXSpec —
     // and the count rides the just-checkpointed ec partitions.
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.pr.localEdgeThreshold", "1000000").toLong
-    val local = ec.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.pr.impl",
-      if (local) "local" else "distributed")
-    val ranks = if (local) localPageRank(ec, iters)
+    val ranks = if (Arms.local(edges.sparkSession, "pr", ec.count()))
+      localPageRank(ec, iters)
       else distributedPageRank(ec, verts, iters)
     ranks.join(verts, ranks("v") === verts("vid"))
       .select(col("id"), col("r").as("rank_micro"))
@@ -168,9 +163,9 @@ object GraphAnalytics {
     * vertices present at zero — the x02 self-edge trick), so a round is
     * one equi-join + one hash aggregate + one O(1) max reduce, the same
     * shape as the PageRank loop and dispatched the same way (driver
-    * array at or under `spark.graft.hits.localEdgeThreshold` tagged
-    * rows, distributed join+agg loop above; arms equality-pinned in
-    * GraphXSpec, choice observable in `graft.hits.impl`).
+    * array at or under 1M tagged rows, distributed join+agg loop
+    * above; arms equality-pinned in GraphXSpec, choice observable in
+    * `graft.hits.impl`).
     * Returns [id, hub_micro, auth_micro]; true score = micro / 1e6 of
     * the per-round max. */
   def hits(edges: DataFrame, iters: Int = 10): DataFrame = {
@@ -186,12 +181,8 @@ object GraphAnalytics {
       .unionAll(e.select(col("dst"), col("src"), lit("h")))
       .unionAll(verts.select(col("vid"), col("vid"), lit("z")))
       .transform(graft.Ckpt.cut)
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.hits.localEdgeThreshold", "1000000").toLong
-    val local = ced.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.hits.impl",
-      if (local) "local" else "distributed")
-    val hs = if (local) localHits(ced, iters)
+    val hs = if (Arms.local(edges.sparkSession, "hits", ced.count()))
+      localHits(ced, iters)
       else distributedHits(ced, verts, iters)
     hs.join(verts, hs("v") === verts("vid"))
       .select(col("id"), col("h").as("hub_micro"), col("a").as("auth_micro"))
@@ -266,8 +257,7 @@ object GraphAnalytics {
     * seed-conditional restart term). Off-ball vertices stay at exactly
     * 0 and never acquire mass: at scale the touched set is the seeds'
     * forward ball, not the graph. Same adaptive dispatch as [[pageRank]]
-    * (`spark.graft.ppr.localEdgeThreshold`, choice in `graft.ppr.impl`,
-    * arms equality-pinned in GraphXSpec).
+    * (choice in `graft.ppr.impl`, arms equality-pinned in GraphXSpec).
     * Returns [id, rank_micro] for TOUCHED vertices only (rank > 0) —
     * the distributed loop carries just the positive frontier, so state
     * is ball-sized, not graph-sized; true score = rank_micro / 1e6. */
@@ -288,12 +278,8 @@ object GraphAnalytics {
       .select(col("src"), col("dst"), col("od"))
       .unionAll(verts.select(col("vid"), col("vid"), lit(0L)))
       .transform(graft.Ckpt.cut)
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.ppr.localEdgeThreshold", "1000000").toLong
-    val local = ec.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.ppr.impl",
-      if (local) "local" else "distributed")
-    val ranks = if (local) localPpr(ec, seedVids, iters)
+    val ranks = if (Arms.local(edges.sparkSession, "ppr", ec.count()))
+      localPpr(ec, seedVids, iters)
       else distributedPpr(ec, verts, seedVids, iters)
     ranks.join(verts, ranks("v") === verts("vid"))
       .select(col("id"), col("r").as("rank_micro"))
@@ -391,24 +377,18 @@ object GraphAnalytics {
   }
 
   /** Landmark shortest paths with scale dispatch — the CC-style seam:
-    * at or below `spark.graft.sp.pregelEdgeThreshold` edges (default
-    * 100k) the GraphX Pregel program runs (lower constant factors on
-    * small graphs — one tight RDD loop, no per-hop planning); above it
-    * the DataFrame BFS loop is chosen, so THE SCALE PATH IS THE DEFAULT
-    * AT SCALE (no per-vertex hash maps serialized around, AQE replans
-    * every hop, same loop shape as traversal/CC). The two are proven
+    * at or below 100k edges the GraphX Pregel program runs (the
+    * `local` arm: lower constant factors on small graphs — one tight
+    * RDD loop, no per-hop planning); above it the DataFrame BFS loop
+    * is chosen, so THE SCALE PATH IS THE DEFAULT AT SCALE (no
+    * per-vertex hash maps serialized around, AQE replans every hop,
+    * same loop shape as traversal/CC). The two are proven
     * output-identical in GraphXSpec. The edge count rides the count the
-    * caller's plan needs anyway and the choice lands in the
-    * `graft.sp.impl` local property so tests pin the dispatch. */
-  def shortestPathsAuto(edges: DataFrame, landmarks: Seq[String]): DataFrame = {
-    val spark = edges.sparkSession
-    val threshold = spark.conf
-      .get("spark.graft.sp.pregelEdgeThreshold", "100000").toLong
-    val impl = if (edges.count() <= threshold) "pregel" else "df"
-    spark.sparkContext.setLocalProperty("graft.sp.impl", impl)
-    if (impl == "pregel") shortestPaths(edges, landmarks)
+    * caller's plan needs anyway; the choice lands in `graft.sp.impl`. */
+  def shortestPathsAuto(edges: DataFrame, landmarks: Seq[String]): DataFrame =
+    if (Arms.local(edges.sparkSession, "sp", edges.count(), 100000L))
+      shortestPaths(edges, landmarks)
     else shortestPathsDF(edges, landmarks)
-  }
 
   /** Multi-landmark directed hop counts as plain DataFrame joins — the
     * scale path for [[shortestPaths]] (identical output; equality
@@ -476,12 +456,7 @@ object GraphAnalytics {
     // runs as a driver array loop (the count rides the caller's
     // checkpointed pair list). Both arms share the exact integer
     // min-plus recurrence — equality pinned in GraphXSpec.
-    val threshold = spark.conf
-      .get("spark.graft.sssp.localEdgeThreshold", "2000000").toLong
-    val local = pairs.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.sssp.impl",
-      if (local) "local" else "distributed")
-    if (local) {
+    if (Arms.local(spark, "sssp", pairs.count(), 2000000L)) {
       val es = pairs.select(col("p1"), col("p2"), col("w"))
         .as[(Long, Long, Long)].collect()
       val dist = scala.collection.mutable.HashMap(source -> 0L)
@@ -557,13 +532,9 @@ object GraphAnalytics {
     // identical σ/δ integer recurrences run as driver hash-map loops;
     // above it the distributed layer sweep below is the scale path.
     // Equality of the two arms is pinned in GraphXSpec.
-    val threshold = spark.conf
-      .get("spark.graft.bc.localEdgeThreshold", "2000000").toLong
-    val local = pairs.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.bc.impl",
-      if (local) "local" else "distributed")
-    if (local) return localBoundedBetweenness(pairs, sources, depth)
-    distBoundedBetweenness(pairs, sources, depth)
+    if (Arms.local(spark, "bc", pairs.count(), 2000000L))
+      localBoundedBetweenness(pairs, sources, depth)
+    else distBoundedBetweenness(pairs, sources, depth)
   }
 
   /** Driver-side arm of [[boundedBetweenness]]: the same layered
@@ -1084,12 +1055,9 @@ object GraphAnalytics {
     // min member, which is exactly the relabel contract. Leaf peeling
     // remains the at-scale move: it is what keeps the post-peel core
     // under the bounded collect when the graph itself is far over the
-    // threshold (ScaleRehearsalSpec pins that design at 10x).
-    val directThreshold = und.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-    if (und.count() / 2 <= directThreshold) {
-      und.sparkSession.sparkContext
-        .setLocalProperty("graft.cc.impl", "local")
+    // threshold (ScaleRehearsalSpec pins that design at 10x). und
+    // carries both directions, so rows/2 = undirected edge count.
+    if (Arms.local(und.sparkSession, "cc", und.count() / 2)) {
       return localUnionFind(und)
         .select(col("id"), col("comp").as("component"))
     }
@@ -1136,23 +1104,18 @@ object GraphAnalytics {
 
   /** Core-CC dispatcher: after leaf-peeling the remaining core is often
     * tiny relative to the graph (92% of vertices here are degree-1), so
-    * below `spark.graft.cc.localEdgeThreshold` undirected edges
-    * (default 1M ≈ tens of MB of ids on the driver) we finish with an
-    * exact driver-side union-find — the same bounded-collect-with-
-    * distributed-fallback shape as Traversal's point-path frontier. Above
-    * the bound the pointer-jump loop runs entirely as shuffles. */
+    * at or below 1M undirected edges (≈ tens of MB of ids on the
+    * driver) we finish with an exact driver-side union-find — the same
+    * bounded-collect-with-distributed-fallback shape as Traversal's
+    * point-path frontier. Above the bound the pointer-jump loop runs
+    * entirely as shuffles. */
   private def ccLoop(und0: DataFrame): DataFrame = {
     val und = und0.transform(graft.Ckpt.cut)
-    val threshold = und.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-    // und carries both directions, so rows/2 = undirected edge count;
-    // the count is a cheap scan of the just-checkpointed partitions
-    val local = und.count() / 2 <= threshold
-    // observability for the scale-rehearsal pins (ScaleRehearsalSpec):
-    // which arm ran, and how many rounds the distributed loop took
-    und.sparkSession.sparkContext.setLocalProperty("graft.cc.impl",
-      if (local) "local" else "distributed")
-    if (local) localUnionFind(und) else distributedCcLoop(und)
+    // rows/2 = undirected edge count; the count is a cheap scan of the
+    // just-checkpointed partitions
+    if (Arms.local(und.sparkSession, "cc", und.count() / 2))
+      localUnionFind(und)
+    else distributedCcLoop(und)
   }
 
   /** Exact union-find over a collected edge list; comp = min member id
@@ -1440,12 +1403,7 @@ object GraphAnalytics {
     // arrays (identical arithmetic — pure pointer composition and
     // window minima), one collect instead of ~2·pow jobs
     val spark0 = succ.sparkSession
-    val cycThreshold = spark0.conf
-      .get("spark.graft.cycle.localEdgeThreshold", "1000000").toLong
-    val cycLocal = succ.count() <= cycThreshold
-    spark0.sparkContext.setLocalProperty("graft.cycle.impl",
-      if (cycLocal) "local" else "distributed")
-    if (cycLocal) {
+    if (Arms.local(spark0, "cycle", succ.count())) {
       import spark0.implicits._
       val sc = succ.as[(Long, Long)].collect()
       val next = sc.toMap
@@ -1536,12 +1494,7 @@ object GraphAnalytics {
     // adaptive dispatch (the MIS-loop pattern): O(ecc) frontier rounds
     // of 3-exchange jobs collapse to one driver BFS under the local
     // threshold — identical (v, dist) set by BFS uniqueness
-    val bfsThreshold = spark.conf
-      .get("spark.graft.bfs.localEdgeThreshold", "1000000").toLong
-    val bfsLocal = und.count() <= bfsThreshold
-    spark.sparkContext.setLocalProperty("graft.bfs.impl",
-      if (bfsLocal) "local" else "distributed")
-    if (bfsLocal) {
+    if (Arms.local(spark, "bfs", und.count())) {
       val adj = und.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
       val dist = scala.collection.mutable.HashMap(root -> 0L)
@@ -1599,11 +1552,10 @@ object GraphAnalytics {
     * vertex id (shuffle-partitioned, no broadcast of unbounded sets);
     * the live subgraph shrinks monotonically; per-iteration
     * `Ckpt.cut` keeps lineage flat (reliable under
-    * spark.graft.checkpointDir like the other loops). Under
-    * `spark.graft.scc.localEdgeThreshold` (default 1M edges ≈ tens of
-    * MB of ids) an exact driver-side iterative Tarjan finishes the
-    * job — the CC dispatcher discipline; arms equality-pinned in
-    * GraphXSpec. */
+    * spark.graft.checkpointDir like the other loops). At or under 1M
+    * edges (≈ tens of MB of ids) an exact driver-side iterative Tarjan
+    * finishes the job — the CC dispatcher discipline; arms
+    * equality-pinned in GraphXSpec. */
   def stronglyConnectedComponents(edges0: DataFrame,
       maxRounds: Int = 100): DataFrame = {
     val edges = edges0
@@ -1611,13 +1563,9 @@ object GraphAnalytics {
         col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct().transform(graft.Ckpt.cut)
-    val spark = edges.sparkSession
-    val threshold = spark.conf
-      .get("spark.graft.scc.localEdgeThreshold", "1000000").toLong
-    val local = edges.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.scc.impl",
-      if (local) "local" else "distributed")
-    if (local) localTarjan(edges) else distributedScc(edges, maxRounds)
+    if (Arms.local(edges.sparkSession, "scc", edges.count()))
+      localTarjan(edges)
+    else distributedScc(edges, maxRounds)
   }
 
   /** Iterative (explicit-stack) Tarjan over collected edges; relabels
@@ -1716,7 +1664,7 @@ object GraphAnalytics {
       round += 1
       if (round > maxRounds) throw new IllegalStateException(
         s"SCC peel exceeded $maxRounds rounds ($nVerts vertices live); " +
-          "raise maxRounds or spark.graft.scc.localEdgeThreshold")
+          "raise maxRounds")
       // trim to fixpoint: no in-edge or no out-edge → singleton SCC
       var trimming = true
       while (trimming && nVerts > 0) {
@@ -1796,12 +1744,7 @@ object GraphAnalytics {
     // id-ascending chains, so under the local threshold the identical
     // round recurrence runs as a driver sweep — same winners, same
     // round tags, same rounds metric (MisSpec + arms test pin it)
-    val misThreshold = spark.conf
-      .get("spark.graft.mis.localEdgeThreshold", "1000000").toLong
-    val misLocal = liveEdges.count() <= misThreshold
-    spark.sparkContext.setLocalProperty("graft.mis.impl",
-      if (misLocal) "local" else "distributed")
-    if (misLocal) {
+    if (Arms.local(spark, "mis", liveEdges.count())) {
       import spark.implicits._
       val adj = liveEdges.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
@@ -1894,12 +1837,7 @@ object GraphAnalytics {
     // Jones–Plassmann recurrence as a driver sweep under the local
     // threshold — same colors, same round count (a vertex colors in
     // round 1 + max(round of smaller neighbours))
-    val colThreshold = spark.conf
-      .get("spark.graft.coloring.localEdgeThreshold", "1000000").toLong
-    val colLocal = dep.count() * 2 <= colThreshold
-    spark.sparkContext.setLocalProperty("graft.coloring.impl",
-      if (colLocal) "local" else "distributed")
-    if (colLocal) {
+    if (Arms.local(spark, "coloring", dep.count() * 2)) {
       import spark.implicits._
       val deps = dep.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
@@ -1999,13 +1937,7 @@ object GraphAnalytics {
     // adaptive dispatch (the MIS-loop pattern): identical min-pointer
     // handshake rounds as a driver sweep under the local threshold —
     // same pairs, same round tags, same rounds metric
-    val matThreshold = spark.conf
-      .get("spark.graft.matching.localEdgeThreshold", "1000000").toLong
-    val matNE = liveEdges.count()
-    val matLocal = matNE <= matThreshold
-    spark.sparkContext.setLocalProperty("graft.matching.impl",
-      if (matLocal) "local" else "distributed")
-    if (matLocal) {
+    if (Arms.local(spark, "matching", liveEdges.count())) {
       import spark.implicits._
       val adj = liveEdges.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) =>
@@ -2037,7 +1969,7 @@ object GraphAnalytics {
       return spark.createDataset(out.toSeq).toDF("u", "v", "mround")
     }
     var round = 0
-    var nEdges = matNE
+    var nEdges = liveEdges.count()
     while (nEdges > 0) {
       round += 1
       if (round > maxRounds) throw new IllegalStateException(
@@ -2144,15 +2076,13 @@ object GraphAnalytics {
         // per component, so |pairs| ≤ #components); any CONSISTENT
         // representative works — labels never reach the output. The
         // pseudo-forest is tiny relative to the graph (halving per
-        // round), so below the CC local threshold the union-find runs
+        // round), so at or under 1M picks the union-find runs
         // directly on the driver from the already-checkpointed picked
         // rows — the full connectedComponents call spent ~6
         // choreography jobs per round on leaf-peel frames just to
-        // reach the same collect. Above the threshold the distributed
-        // CC path still runs.
-        val ccThreshold = spark.conf
-          .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-        val cc = if (picked.count() <= ccThreshold) {
+        // reach the same collect. Above the bound the distributed CC
+        // path still runs; `graft.msf.impl` records the last round's arm.
+        val cc = if (Arms.local(spark, "msf", picked.count())) {
           import spark.implicits._
           val prs = picked.select(col("cu"), col("cv"))
             .as[(Long, Long)].collect()
@@ -2379,12 +2309,7 @@ object GraphAnalytics {
     // distributed join+window loop below runs; both arms are the same
     // exact integer math (LouvainSpec pins them against an independent
     // simulator and against each other).
-    val threshold = spark.conf
-      .get("spark.graft.louvain.localEdgeThreshold", "1000000").toLong
-    val localOk = sym.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.louvain.impl",
-      if (localOk) "local" else "distributed")
-    if (localOk) {
+    if (Arms.local(spark, "louvain", sym.count())) {
       import spark.implicits._
       val edges = sym.select(col("u"), col("v"), col("w"))
         .as[(Long, Long, Long)].collect()
@@ -2579,11 +2504,8 @@ object GraphAnalytics {
     // the DataFrame loop below (same recurrence the x34 oracle
     // replays). At sf0.1 the distributed outer loop was ~500
     // scheduled single-stage jobs moving <1 MB of data.
-    val lvThreshold = spark.conf
-      .get("spark.graft.louvain.localEdgeThreshold", "1000000").toLong
-    if (sym.count() <= lvThreshold) {
+    if (Arms.local(spark, "louvain", sym.count())) {
       import spark.implicits._
-      spark.sparkContext.setLocalProperty("graft.louvain.impl", "local")
       var edges = sym.select(col("u"), col("v"), col("w"))
         .as[(Long, Long, Long)].collect()
       var selfs = Map.empty[Long, Long]

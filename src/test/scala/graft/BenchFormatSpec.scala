@@ -59,6 +59,18 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.length > 2000)
   }
 
+  test("compact line stays under budget when _rest tops 100,000 s") {
+    // 300 entries of ~1,000 s: whatever fits, the rollup is > 100,000 s
+    // and renders wider than "99999.999"; every budget must still hold,
+    // including the ones the kept entries fill exactly
+    val big = (1 to 300).map(i => f"q$i%03d" -> (1000.0 + i))
+    for (budget <- 200 to 1800) {
+      val line = Bench.compactLine(big, "/root/testdata/sf0.1", budget)
+      assert(line.length <= budget, s"budget $budget: ${line.length} bytes")
+      assert(line.contains("\"_rest\":"))
+    }
+  }
+
   test("compact line degrades to _rest-only rather than overflowing") {
     val line = Bench.compactLine(entries, "/root/testdata/sf0.1",
       budget = 120)

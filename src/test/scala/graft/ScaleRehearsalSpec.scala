@@ -34,8 +34,7 @@ class ScaleRehearsalSpec extends SparkSpec {
       concat(col("cp"), lit("#"), col("src_id")).as("src_id"),
       col("label"),
       concat(col("cp"), lit("#"), col("dst_id")).as("dst_id"))
-    try {
-      spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    withDistributedArms {
       val baseComps = GraphAnalytics.connectedComponents(edges)
         .select("component").distinct().count()
       val baseRounds = ccRounds
@@ -53,7 +52,7 @@ class ScaleRehearsalSpec extends SparkSpec {
       // loose wall bound: catches accidental plan blowup (lost
       // checkpoint => exponential re-inlining), not host noise
       assert(sec < 300, s"10x CC took ${sec}s")
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    }
   }
 
   test("CC local finish stays bounded by design at 10x (no threshold trip)") {
@@ -362,8 +361,7 @@ class ScaleRehearsalSpec extends SparkSpec {
     }
     def rounds: Int = spark.sparkContext
       .getLocalProperty("graft.scc.rounds").toInt
-    try {
-      spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
+    withDistributedArms {
       val scc12 = GraphAnalytics.stronglyConnectedComponents(chain(12))
         .select("scc_id").distinct().count()
       val r12 = rounds
@@ -384,7 +382,7 @@ class ScaleRehearsalSpec extends SparkSpec {
           .count()
       }
       assert(ex.getMessage.contains("exceeded 3 rounds"), ex.getMessage)
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    }
   }
 
   test("MIS / coloring / matching rounds are volume-independent at 10x") {
@@ -580,8 +578,7 @@ class ScaleRehearsalSpec extends SparkSpec {
         (col("dst") + col("off")).as("dst"))
     def rounds: Int = spark.sparkContext
       .getLocalProperty("graft.scc.rounds").toInt
-    try {
-      spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
+    withDistributedArms {
       val base = GraphAnalytics.stronglyConnectedComponents(edges)
         .select("scc_id").distinct().count()
       val baseRounds = rounds
@@ -596,6 +593,6 @@ class ScaleRehearsalSpec extends SparkSpec {
       assert(rounds == baseRounds,
         s"peel rounds grew with volume: $rounds vs $baseRounds")
       assert(sec < 300, s"10x SCC took ${sec}s")
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    }
   }
 }

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `f` with every dual-arm graph algorithm forced onto its
+    * distributed arm (graphx.Arms), and clears the switch after. */
+  def withDistributedArms[T](f: => T): T = {
+    spark.conf.set(graft.graphx.Arms.ForceDistributedConf, "true")
+    try f finally spark.conf.unset(graft.graphx.Arms.ForceDistributedConf)
+  }
 }
 
 object SparkSpec {

@@ -126,6 +126,16 @@ class EngineSpec extends SparkSpec {
     } finally m.close()
   }
 
+  test("metrics keep only the most recent MaxEntries entries") {
+    val m = Metrics.attach(spark)
+    m.close() // detach the listener: only the entries recorded below
+    val n = Metrics.MaxEntries + 5
+    (1 to n).foreach(i => m.record(m.Entry(s"q$i", i.toLong, None)))
+    val snap = m.snapshot()
+    assert(snap.size == Metrics.MaxEntries)
+    assert(snap.head.action == "q6" && snap.last.action == s"q$n")
+  }
+
   test("cosine_sim is callable from SQL via GraftExtensions") {
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c1, " +

@@ -32,8 +32,7 @@ class GraphXSpec extends SparkSpec {
     val viaLocal = GraphAnalytics.pageRank(edges, iters = 20)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.pr.impl") == "local")
-    try {
-      spark.conf.set("spark.graft.pr.localEdgeThreshold", "0")
+    withDistributedArms {
       val viaDist = GraphAnalytics.pageRank(edges, iters = 20)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext.getLocalProperty("graft.pr.impl")
@@ -44,7 +43,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.pr.localEdgeThreshold")
+    }
   }
 
   test("connectedComponents: two disjoint chains get two components") {
@@ -103,13 +102,14 @@ class GraphXSpec extends SparkSpec {
       "p" -> "q", "q" -> "r", "r" -> "p", "z" -> "z")
     val expect = GraphAnalytics.connectedComponents(edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try {
+    withDistributedArms {
       val got = GraphAnalytics.connectedComponents(edges)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(spark.sparkContext.getLocalProperty("graft.cc.impl")
+        == "distributed")
       assert(got == expect)
       assert(got("d") == "a" && got("r") == "p" && got("z") == "z")
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    }
   }
 
   test("scc: known graph, both arms agree, min-member labels") {
@@ -131,14 +131,13 @@ class GraphXSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.scc.impl") == "local")
     assert(local == expect, local.toString)
-    spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
-    try {
+    withDistributedArms {
       val dist = GraphAnalytics.stronglyConnectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext
         .getLocalProperty("graft.scc.impl") == "distributed")
       assert(dist == expect, dist.toString)
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    }
   }
 
   test("scc arms agree on the x25 item-transition graph (sf0.001)") {
@@ -155,8 +154,7 @@ class GraphXSpec extends SparkSpec {
       .select(col("a.p").as("src"), col("b.p").as("dst")).distinct()
     val local = GraphAnalytics.stronglyConnectedComponents(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
-    try {
+    withDistributedArms {
       val dist = GraphAnalytics.stronglyConnectedComponents(e)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == local)
@@ -164,7 +162,7 @@ class GraphXSpec extends SparkSpec {
         .getLocalProperty("graft.scc.rounds").toInt
       assert(rounds >= 1 && rounds <= 20,
         s"peel rounds $rounds outside sane band")
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    }
   }
 
   test("bfsDistances: path + branch + unreachable island") {
@@ -233,17 +231,16 @@ class GraphXSpec extends SparkSpec {
     val lms = Seq("nation/1", "customer/7")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-    try {
-      spark.conf.set("spark.graft.sp.pregelEdgeThreshold", "0")
-      val viaDf = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
-      assert(spark.sparkContext.getLocalProperty("graft.sp.impl") == "df",
-        "every graph is above threshold 0 — the DF loop must be chosen")
-      spark.conf.set("spark.graft.sp.pregelEdgeThreshold",
-        Long.MaxValue.toString)
-      val viaPregel = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
-      assert(spark.sparkContext.getLocalProperty("graft.sp.impl") == "pregel")
-      assert(viaDf == viaPregel, "dispatch arms diverged")
-    } finally spark.conf.unset("spark.graft.sp.pregelEdgeThreshold")
+    val viaDf = withDistributedArms {
+      val r = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
+      assert(spark.sparkContext.getLocalProperty("graft.sp.impl") ==
+        "distributed", "forced distributed — the DF loop must be chosen")
+      r
+    }
+    // the sf0.001 graph is far under the 100k-edge bound: Pregel
+    val viaPregel = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
+    assert(spark.sparkContext.getLocalProperty("graft.sp.impl") == "local")
+    assert(viaDf == viaPregel, "dispatch arms diverged")
   }
 
   test("cycleLabel: tails land on their cycle, min label per cycle") {
@@ -304,8 +301,7 @@ class GraphXSpec extends SparkSpec {
     val viaLocal = GraphAnalytics.hits(edges, iters = 10)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(spark.sparkContext.getLocalProperty("graft.hits.impl") == "local")
-    try {
-      spark.conf.set("spark.graft.hits.localEdgeThreshold", "0")
+    withDistributedArms {
       val viaDist = GraphAnalytics.hits(edges, iters = 10)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(spark.sparkContext.getLocalProperty("graft.hits.impl")
@@ -316,7 +312,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.hits.localEdgeThreshold")
+    }
   }
 
   /** Exact co-purchase adjacency for the x07/x09 structural checks,
@@ -371,8 +367,7 @@ class GraphXSpec extends SparkSpec {
     val viaLocal = GraphAnalytics.personalizedPageRank(edges, seeds, 20)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.ppr.impl") == "local")
-    try {
-      spark.conf.set("spark.graft.ppr.localEdgeThreshold", "0")
+    withDistributedArms {
       val viaDist = GraphAnalytics.personalizedPageRank(edges, seeds, 20)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext.getLocalProperty("graft.ppr.impl")
@@ -383,7 +378,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.ppr.localEdgeThreshold")
+    }
   }
 
   test("x11 harmonic centrality matches an independent driver BFS") {
@@ -566,9 +561,7 @@ class GraphXSpec extends SparkSpec {
     val bcLocal = mapOf(
       GraphAnalytics.boundedBetweenness(pairs, Seq(1L, 6L), depth = 3))
     assert(spark.sparkContext.getLocalProperty("graft.bc.impl") == "local")
-    try {
-      spark.conf.set("spark.graft.sssp.localEdgeThreshold", "0")
-      spark.conf.set("spark.graft.bc.localEdgeThreshold", "0")
+    withDistributedArms {
       val ssspDist = mapOf(
         GraphAnalytics.weightedShortestPaths(wpairs, 1L, rounds = 4))
       assert(spark.sparkContext.getLocalProperty("graft.sssp.impl")
@@ -579,9 +572,6 @@ class GraphXSpec extends SparkSpec {
         == "distributed")
       assert(ssspDist == ssspLocal, s"$ssspDist vs $ssspLocal")
       assert(bcDist == bcLocal, s"$bcDist vs $bcLocal")
-    } finally {
-      spark.conf.unset("spark.graft.sssp.localEdgeThreshold")
-      spark.conf.unset("spark.graft.bc.localEdgeThreshold")
     }
   }
 
@@ -646,8 +636,7 @@ class GraphXSpec extends SparkSpec {
     spark.conf.set("spark.graft.checkpointDir", dir)
     // force the distributed pageRank arm so its per-iteration cuts hit
     // the reliable path too (the driver arm checkpoints nothing)
-    spark.conf.set("spark.graft.pr.localEdgeThreshold", "0")
-    try {
+    try withDistributedArms {
       val relTruss = GraphAnalytics.trussPeel(pairs, k = 4, rounds = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
         .toMap
@@ -663,10 +652,7 @@ class GraphXSpec extends SparkSpec {
       }
       assert(countFiles(java.nio.file.Paths.get(dir)) > 0,
         s"no checkpoint files written under $dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      spark.conf.unset("spark.graft.pr.localEdgeThreshold")
-    }
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("hyperBall: exact balls on a directed chain, estimates monotone") {
@@ -695,27 +681,23 @@ class GraphXSpec extends SparkSpec {
     import spark.implicits._
     val und = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L),
       (4L, 3L), (2L, 10L), (10L, 2L)).toDF("u", "v")
-    val bKey = "spark.graft.bfs.localEdgeThreshold"
     val bLoc = GraphAnalytics.bfsDistances(und, 1L)
       .as[(Long, Long)].collect().sorted.toSeq
-    spark.conf.set(bKey, "0")
-    try {
+    withDistributedArms {
       val bDist = GraphAnalytics.bfsDistances(und, 1L)
         .as[(Long, Long)].collect().sorted.toSeq
       assert(bLoc == bDist, s"bfs arms diverged: $bLoc vs $bDist")
-    } finally spark.conf.unset(bKey)
+    }
     val succ = Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L,
       10L -> 11L, 11L -> 12L, 12L -> 0L, 20L -> 20L)
       .toDF("v", "p")
-    val cKey = "spark.graft.cycle.localEdgeThreshold"
     val cLoc = GraphAnalytics.cycleLabel(succ, 2, 2)
       .as[(Long, Long, Long)].collect().sorted.toSeq
-    spark.conf.set(cKey, "0")
-    try {
+    withDistributedArms {
       val cDist = GraphAnalytics.cycleLabel(succ, 2, 2)
         .as[(Long, Long, Long)].collect().sorted.toSeq
       assert(cLoc == cDist, s"cycle arms diverged: $cLoc vs $cDist")
-    } finally spark.conf.unset(cKey)
+    }
   }
 
 }

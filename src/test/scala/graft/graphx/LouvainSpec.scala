@@ -227,41 +227,53 @@ class LouvainSpec extends SparkSpec {
   }
 
   test("arms equality: local and distributed produce identical results") {
-    // the r9 dispatch (driver arrays under
-    // spark.graft.louvain.localEdgeThreshold, DataFrame loop above)
-    // must be invisible: one level, weighted level, and the full
-    // hierarchy each agree bit-for-bit between arms, including the
+    // the r9 dispatch (driver arrays under the Arms bound, DataFrame
+    // loop above) must be invisible: one level, weighted level, and
+    // the full hierarchy each agree bit-for-bit between arms, including the
     // rounds/levels/gains observability properties
     val edges = k4Chain(12) ++ Seq((3L, 17L), (9L, 30L))
-    def one(forceDist: Boolean): (Map[Long, (Long, Long)], String) = {
-      val key = "spark.graft.louvain.localEdgeThreshold"
-      if (forceDist) spark.conf.set(key, "0") else spark.conf.unset(key)
-      try {
+    def arm[T](forceDist: Boolean)(f: => T): T =
+      if (forceDist) withDistributedArms(f) else f
+    def one(forceDist: Boolean): (Map[Long, (Long, Long)], String) =
+      arm(forceDist) {
         val r = GraphAnalytics.louvainOneLevel(edges.toDF("src", "dst"))
           .select("v", "c", "deg").as[(Long, Long, Long)]
           .collect().map(t => t._1 -> (t._2, t._3)).toMap
         assert(prop("impl") == (if (forceDist) "distributed" else "local"))
         (r, prop("rounds"))
-      } finally spark.conf.unset(key)
-    }
+      }
     val (lr, lrounds) = one(forceDist = false)
     val (dr, drounds) = one(forceDist = true)
     assert(lr == dr, "one-level assignment diverged between arms")
     assert(lrounds == drounds, s"rounds diverged: $lrounds vs $drounds")
-    def hier(forceDist: Boolean): (Map[Long, Long], String, String, String) = {
-      val key = "spark.graft.louvain.localEdgeThreshold"
-      if (forceDist) spark.conf.set(key, "0") else spark.conf.unset(key)
-      try {
+    def hier(forceDist: Boolean): (Map[Long, Long], String, String, String) =
+      arm(forceDist) {
         val m = GraphAnalytics.louvainHierarchy(
             edges.toDF("src", "dst"), maxLevels = 8)
           .as[(Long, Long)].collect().toMap
         (m, prop("levels"), prop("levelRounds"), prop("gains"))
-      } finally spark.conf.unset(key)
-    }
+      }
     val (lh, ll, lv, lg) = hier(forceDist = false)
     val (dh, dl, dv, dg) = hier(forceDist = true)
     assert(lh == dh, "hierarchy mapping diverged between arms")
     assert((ll, lv, lg) == ((dl, dv, dg)),
       s"hierarchy metrics diverged: ($ll,$lv,$lg) vs ($dl,$dv,$dg)")
+  }
+
+  test("hierarchy: a forced-distributed run reports the distributed arm") {
+    // two disjoint K5s contract to a supergraph with no cross edges, so
+    // the last level sees an EMPTY edge list; after a local run, the
+    // forced run must still report `distributed` — not the value the
+    // local run or that empty last level would leave behind
+    val k5 = (0L to 4L).flatMap(a => ((a + 1) to 4L).map(a -> _))
+    val edges = (k5 ++ k5.map { case (a, b) => (a + 100, b + 100) })
+      .toDF("src", "dst")
+    def run() = GraphAnalytics.louvainHierarchy(edges)
+      .as[(Long, Long)].collect().toMap
+    val local = run()
+    assert(prop("impl") == "local")
+    val dist = withDistributedArms(run())
+    assert(prop("impl") == "distributed")
+    assert(dist == local)
   }
 }

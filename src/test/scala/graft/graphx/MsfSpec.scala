@@ -29,8 +29,8 @@ class MsfSpec extends SparkSpec {
       (10L, 11L, 7L), (11L, 12L, 8L)), got.toString)
   }
 
-  test("forest invariant: |edges| = V - #components on the x31 graph") {
-    val pairs = graft.Tables(spark, sfDir, "lineitem")
+  // the x31 co-purchase graph in miniature: weighted part pairs
+  private def x31Pairs = graft.Tables(spark, sfDir, "lineitem")
       .where(col("l_partkey") <= 150)
       .groupBy("l_orderkey")
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
@@ -41,6 +41,12 @@ class MsfSpec extends SparkSpec {
         col("e.p2").cast("long").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("w"))
       .localCheckpoint()
+
+  private def rounds: String = spark.sparkContext
+    .getLocalProperty("graft.msf.rounds")
+
+  test("forest invariant: |edges| = V - #components on the x31 graph") {
+    val pairs = x31Pairs
     val nV = pairs.select(col("u").as("x"))
       .unionAll(pairs.select(col("v").as("x"))).distinct().count()
     val nC = GraphAnalytics.connectedComponents(pairs.select(
@@ -50,11 +56,28 @@ class MsfSpec extends SparkSpec {
     val forest = GraphAnalytics.boruvkaMsf(pairs)
     assert(forest.count() == nV - nC,
       s"forest ${forest.count()} edges, expected ${nV - nC}")
-    val rounds = spark.sparkContext
-      .getLocalProperty("graft.msf.rounds").toInt
+    val nRounds = rounds.toInt
     // component count halves per round
-    assert(rounds <= 63 - java.lang.Long.numberOfLeadingZeros(nV) + 2,
-      s"$rounds rounds for $nV vertices")
+    assert(nRounds <= 63 - java.lang.Long.numberOfLeadingZeros(nV) + 2,
+      s"$nRounds rounds for $nV vertices")
+  }
+
+  test("arms equality: driver and distributed contraction agree") {
+    // the per-round contraction runs a driver union-find under the
+    // Arms bound and the distributed CC above it: same forest rows,
+    // same rounds metric, and `graft.msf.impl` names the arm
+    for (g <- Seq(handGraph, x31Pairs)) {
+      def run() = (GraphAnalytics.boruvkaMsf(g)
+        .select("u", "v", "w", "rnd").as[(Long, Long, Long, Int)]
+        .collect().sorted.toSeq, rounds)
+      val (lRows, lRounds) = run()
+      assert(spark.sparkContext.getLocalProperty("graft.msf.impl") == "local")
+      val (dRows, dRounds) = withDistributedArms(run())
+      assert(spark.sparkContext
+        .getLocalProperty("graft.msf.impl") == "distributed")
+      assert(lRows == dRows, "forest diverged between arms")
+      assert(lRounds == dRounds, s"rounds diverged: $lRounds vs $dRounds")
+    }
   }
 
   test("maxRounds guard fires instead of looping") {
